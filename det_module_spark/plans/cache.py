@@ -20,16 +20,16 @@ so a crashed writer never yields a phantom cache hit.
 At 100 TB the manifest stays tiny (one row per item ever computed) and
 is always the broadcast side of the anti-join.
 
-Durability: the manifest is an append-only TRANSACTION LOG
-(Delta-protocol shape, VERDICT r01 #5). Each commit is one immutable
-parquet file ``{version:020d}.parquet`` whose version is claimed
-atomically with ``link(2)`` (fails with EEXIST if the version exists —
-the local-FS equivalent of HDFS's no-overwrite rename Delta relies
-on); losers of a race re-read the log and retry at the next version.
-Readers resolve current state as "highest version wins per spec_hash",
-so concurrent writers can interleave but can never lose each other's
-rows — rewrite-in-place could. ``compact()`` folds the log into a
-single commit when it grows long.
+Durability: the manifest is an append-only TRANSACTION LOG. Each commit
+is one immutable parquet file ``{version:020d}.parquet`` whose version
+is claimed atomically with ``link(2)`` (fails with EEXIST if the
+version exists — the local-FS equivalent of HDFS's no-overwrite
+rename); losers of a race re-read the log and retry at the next
+version. Readers resolve current state as "highest version wins per
+spec_hash", so concurrent writers can interleave but can never lose
+each other's rows — rewrite-in-place could. Nothing ever deletes a
+commit file, so a listed log file stays readable for the lifetime of
+any lazily evaluated read.
 """
 
 from __future__ import annotations
@@ -68,31 +68,10 @@ _LOG_SCHEMA = T.StructType(
 class CacheManifest:
     """Transaction-log-backed manifest keyed by spec hash."""
 
-    # pinned snapshots older than this many _pinned_log() calls have
-    # their localCheckpoint blocks freed (ADVICE r04: eager pins
-    # otherwise accumulate storage memory for the session's lifetime).
-    # A small window (not immediate unpersist) keeps recently returned
-    # frames computable for callers that haven't materialized yet.
-    _PIN_KEEP = 8
-
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.log_path = os.path.join(root, "_manifest_log")
-        self._pins: list = []
-
-    def _track_pin(self, ck) -> None:
-        """Remember a pinned snapshot; free blocks of pins that have
-        aged out of the keep-window. Unpersisting a localCheckpoint
-        is destructive (lineage truncated), so only clearly-stale
-        snapshots — _PIN_KEEP reads old — are released."""
-        self._pins.append(ck)
-        while len(self._pins) > self._PIN_KEEP:
-            old = self._pins.pop(0)
-            try:
-                old._jdf.queryExecution().logical().rdd().unpersist(False)
-            except Exception:  # noqa: BLE001 - best-effort memory release
-                pass
 
     # -- log primitives ---------------------------------------------
 
@@ -105,9 +84,7 @@ class CacheManifest:
             if f.endswith(".parquet")
         )
 
-    def _commit(
-        self, rows: list[tuple], require_version: int | None = None
-    ) -> int | None:
+    def _commit(self, rows: list[tuple]) -> int:
         """Atomically append one commit file containing ``rows``.
 
         Optimistic concurrency: build the file for version =
@@ -115,24 +92,15 @@ class CacheManifest:
         hard-linking onto an existing path raises FileExistsError, so
         exactly one writer wins each version and the loser retries
         with a re-read version number. The temp file lives OUTSIDE
-        the log dir so readers never see partial parquet.
-
-        ``require_version`` pins the claim to ONE specific version and
-        returns None instead of retrying if it is already taken — the
-        compare-and-swap compact() needs: its snapshot is only valid
-        as version snapshot_max+1, never as "whatever is free next"."""
+        the log dir so readers never see partial parquet."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         os.makedirs(self.log_path, exist_ok=True)
-        os.makedirs(self.root, exist_ok=True)
         cols = [f.name for f in MANIFEST_SCHEMA.fields]
         while True:
-            if require_version is not None:
-                v = require_version
-            else:
-                versions = self._versions()
-                v = versions[-1] + 1 if versions else 0
+            versions = self._versions()
+            v = versions[-1] + 1 if versions else 0
             data = {c: [r[i] for r in rows] for i, c in enumerate(cols)}
             data["version"] = [v] * len(rows)
             table = pa.table(
@@ -158,206 +126,23 @@ class CacheManifest:
                     os.link(tmp, target)
                     return v
                 except FileExistsError:
-                    if require_version is not None:
-                        return None  # CAS failed — caller re-snapshots
                     continue  # lost the race — re-read versions, retry
             finally:
                 os.unlink(tmp)
 
-    @staticmethod
-    def _vanished(e: Exception) -> bool:
-        """True when a Spark read failed because a listed commit file
-        was deleted underneath it (a concurrent compact() folding the
-        log) — the one retriable read error."""
-        s = str(e)
-        # listing-time: PATH_NOT_FOUND / "does not exist";
-        # execution-time (task reading a file deleted after listing):
-        # FAILED_READ_FILE caused by java.nio NoSuchFileException or
-        # java.io FileNotFoundException — match the cause names so a
-        # genuinely corrupt file (FAILED_READ_FILE with another cause)
-        # still raises instead of retrying forever.
-        return (
-            "FileNotFound" in s
-            or "NoSuchFile" in s
-            or "does not exist" in s
-            or "PATH_NOT_FOUND" in s
-        )
-
-    @property
-    def _ckpt_dir(self) -> str:
-        return os.path.join(self.log_path, "_ckpt")
-
-    def _ckpt_versions(self) -> list[int]:
-        """Available checkpoint versions (state folded THROUGH that
-        commit version), ascending."""
-        if not os.path.isdir(self._ckpt_dir):
-            return []
-        return sorted(
-            int(f.split(".")[0])
-            for f in os.listdir(self._ckpt_dir)
-            if f.endswith(".parquet")
-        )
-
-    def checkpoint(self) -> int | None:
-        """Delta-_last_checkpoint mirror: fold the state through the
-        CURRENT max commit version V into ``_ckpt/V.parquet`` without
-        deleting any commit — reads start from the newest applicable
-        checkpoint and replay only the tail, while time travel to any
-        version keeps working (unlike ``compact()``, which collapses
-        history). Checkpoint rows carry ``version = V`` so the normal
-        highest-version-wins replay handles them with no special case.
-
-        Concurrency: the fold uses the VERIFIED pinned set and labels
-        itself with that set's own max version — never a version
-        chosen from an earlier listing. Folding a pre-pinned target
-        with ``filter(version <= v)`` would be wrong under a racing
-        compact(): the pinned set can legally be [5..10, fold-11]
-        (commits 0..4 already deleted, all pinned files exist), where
-        dropping the fold yields a PARTIAL state for v=10. The pinned
-        set is always complete for its own max version (untouched
-        commits, or deletions covered by the fold that landed before
-        they started), so fold everything and take v = max(version).
-        Two racers produce equivalent files — the ``os.link`` claim
-        dedupes. Returns the checkpointed version, or None on an
-        empty log."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        while True:
-            log = self._pinned_log()
-            if log is None:
-                return None
-            v = int(log.agg(F.max("version")).collect()[0][0])
-            if v in self._ckpt_versions():
-                return v
-            w = Window.partitionBy("spec_hash").orderBy(F.desc("version"))
-            state = (
-                log.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn", "version")
-                .collect()
-            )
-            cols = [f.name for f in MANIFEST_SCHEMA.fields]
-            data = {c: [r[i] for r in state] for i, c in enumerate(cols)}
-            data["version"] = [v] * len(state)
-            table = pa.table(
-                data,
-                schema=pa.schema(
-                    [
-                        ("spec_hash", pa.string()),
-                        ("kind", pa.string()),
-                        ("status", pa.int32()),
-                        ("committed", pa.bool_()),
-                        ("path", pa.string()),
-                        ("update_time", pa.int64()),
-                        ("version", pa.int64()),
-                    ]
-                ),
-            )
-            os.makedirs(self._ckpt_dir, exist_ok=True)
-            fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".ckpt.tmp")
-            os.close(fd)
-            try:
-                pq.write_table(table, tmp)
-                target = os.path.join(self._ckpt_dir, f"{v:020d}.parquet")
-                try:
-                    os.link(tmp, target)
-                except FileExistsError:
-                    pass  # a racer checkpointed the same version
-                return v
-            finally:
-                os.unlink(tmp)
-
-    def _pinned_log(self, as_of: int | None = None) -> DataFrame | None:
-        """Replayable log snapshot, safe against concurrent compact():
-        pin the current file listing, then EAGERLY materialize it
-        (localCheckpoint) so a compact deleting those files afterwards
-        cannot break downstream (lazy) consumers. If a listed file
-        vanishes during materialization, re-list and retry — the
-        replacement listing always contains the fold commit (compact
-        claims its version BEFORE deleting), so the retried state is
-        complete, never partial. This retires the round-3 "concurrent
-        readers may need a retry" caveat. None = empty log.
-
-        When a checkpoint ≤ ``as_of`` (or any, for as_of=None) exists,
-        the pinned set is [newest applicable checkpoint] + commits
-        ABOVE it — replay cost ∝ tail length, not log length. Commits
-        a compact() deleted below the checkpoint are covered by either
-        the checkpoint itself or the compact's fold commit in the
-        tail.
-
-        Empty-listing guard: POSIX readdir overlapping compact()'s
-        delete-olds-after-claiming-fold window may legally miss BOTH
-        the just-deleted files and the just-created fold, returning a
-        transiently empty listing for a non-empty log — re-list a few
-        times before trusting emptiness (a genuinely empty log stays
-        empty; the race window is microseconds). Snapshot-consistent
-        listings (object stores, Delta) don't have this artifact."""
-        import time
-
-        empty_retries = 0
-        while True:
-            ckpts = [
-                c
-                for c in self._ckpt_versions()
-                if as_of is None or c <= as_of
-            ]
-            base = max(ckpts) if ckpts else None
-            versions = [
-                v for v in self._versions() if base is None or v > base
-            ]
-            if not versions and base is None:
-                if empty_retries < 3:
-                    empty_retries += 1
-                    time.sleep(0.002 * empty_retries)
-                    continue
-                return None
-            empty_retries = 0
-            files = [
-                os.path.join(self.log_path, f"{v:020d}.parquet")
-                for v in versions
-            ]
-            if base is not None:
-                files.append(
-                    os.path.join(self._ckpt_dir, f"{base:020d}.parquet")
-                )
-            try:
-                # DataFrame CREATION lists the paths eagerly, so it
-                # can throw "path does not exist" too — keep it inside
-                # the retry along with the materialization.
-                log = self.spark.read.schema(_LOG_SCHEMA).parquet(*files)
-                ck = log.localCheckpoint(eager=True)
-            except Exception as e:  # noqa: BLE001 — inspect and re-raise
-                if self._vanished(e):
-                    continue
-                raise
-            # Deletion racing the read does NOT always raise: observed
-            # empirically (and load-bearing for correctness), Spark can
-            # return a silently EMPTY — or worse, partial — scan when
-            # pinned files vanish between listing and execution. Commit
-            # files are immutable while present, so "all pinned files
-            # still exist after materialization" proves the snapshot
-            # was complete; otherwise a compact folded under us and the
-            # fresh listing (which necessarily contains its fold) is
-            # one retry away.
-            if all(os.path.exists(f) for f in files):
-                self._track_pin(ck)
-                return ck
-            continue
-
-    def read(self, as_of_version: int | None = None) -> DataFrame:
-        """Manifest state: replay the log, highest version wins per
-        spec_hash. ``as_of_version`` is TIME TRAVEL — replay only
-        commits with version <= it, reproducing any historical state
-        exactly (commits are immutable once claimed, so the snapshot
-        is stable until those files are compacted away; compact()
-        folds history and collapses earlier versions; checkpoint()
-        accelerates reads while PRESERVING time travel)."""
-        log = self._pinned_log(as_of=as_of_version)
-        if log is None:
+    def read(self) -> DataFrame:
+        """Manifest state: replay the listed commit files, highest
+        version wins per spec_hash. Lazy — commit files are immutable
+        and never deleted, so the listing taken here stays readable
+        however late the frame is evaluated; commits claimed after the
+        listing are simply not part of this snapshot."""
+        files = [
+            os.path.join(self.log_path, f"{v:020d}.parquet")
+            for v in self._versions()
+        ]
+        if not files:
             return self.spark.createDataFrame([], schema=MANIFEST_SCHEMA)
-        if as_of_version is not None:
-            log = log.filter(F.col("version") <= as_of_version)
+        log = self.spark.read.schema(_LOG_SCHEMA).parquet(*files)
         w = Window.partitionBy("spec_hash").orderBy(F.desc("version"))
         return (
             log.withColumn("_rn", F.row_number().over(w))
@@ -366,108 +151,30 @@ class CacheManifest:
         )
 
     def versions(self) -> list[int]:
-        """Committed log versions, ascending — the valid arguments to
-        ``read(as_of_version=...)``."""
+        """Committed log versions, ascending."""
         return self._versions()
-
-    def compact(self) -> None:
-        """Fold the whole log into one commit file and drop the older
-        files — a compare-and-swap loop so concurrent WRITERS are safe:
-
-        1. pin the file listing (snapshot_max = highest listed version)
-        2. replay exactly those files into the folded state
-        3. claim version snapshot_max + 1 with ``require_version``
-
-        If ANY commit landed after the snapshot it owns snapshot_max+1
-        (writers always claim the next contiguous version), so the CAS
-        fails and the whole snapshot retries — the folded state can
-        never be assigned a version above a commit it didn't include,
-        which is the lost-update the old read-then-append had.
-        Concurrent READERS are also safe: reads pin + eagerly
-        materialize their file listing (``_pinned_log``) and retry if
-        a listed file vanished, and the retried listing necessarily
-        contains this compact's fold commit, so they observe either
-        the pre-fold or post-fold state — never a partial one. Two
-        concurrent compacts serialize the same way: the loser's
-        snapshot-read either succeeds (its listing already held the
-        winner's fold, whose replay is state-complete) or vanishes
-        mid-read and retries."""
-        while True:
-            versions = self._versions()
-            if not versions:
-                return
-            snap_max = versions[-1]
-            files = [
-                os.path.join(self.log_path, f"{v:020d}.parquet")
-                for v in versions
-            ]
-            w = Window.partitionBy("spec_hash").orderBy(F.desc("version"))
-            try:
-                # the read lists paths eagerly: inside the retry too
-                log = self.spark.read.schema(_LOG_SCHEMA).parquet(*files)
-                state = [
-                    tuple(r)
-                    for r in log.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1)
-                    .drop("_rn", "version")
-                    .collect()
-                ]
-            except Exception as e:  # noqa: BLE001 — inspect, re-raise
-                if self._vanished(e):
-                    continue  # another compact folded under us — retry
-                raise
-            # same silent-partial-read hazard as _pinned_log: only
-            # trust (and fold!) the snapshot if every pinned file
-            # still exists after the collect — folding a silently
-            # partial state would be durable data loss.
-            if not all(os.path.exists(f) for f in files):
-                continue
-            if self._commit(state, require_version=snap_max + 1) is None:
-                continue  # a commit landed after the snapshot — retry
-            for old in versions:
-                # missing_ok: a racing compact that lost the CAS may
-                # still have won an EARLIER fold and deleted some of
-                # these already
-                p = os.path.join(self.log_path, f"{old:020d}.parquet")
-                try:
-                    os.unlink(p)
-                except FileNotFoundError:
-                    pass
-            return
-
-    def cached_hashes(self) -> DataFrame:
-        m = self.read()
-        return m.filter(
-            (F.col("status") == STATUS_DONE) & F.col("committed")
-        ).select("spec_hash")
 
     def missing(self, items: DataFrame) -> DataFrame:
         """Items that must run: requested − cached, as a left-anti join
-        against the (broadcast) manifest."""
-        return items.join(
-            F.broadcast(self.cached_hashes()), "spec_hash", "left_anti"
+        against the (broadcast, manifest-sized) set of cached hashes."""
+        cached = (
+            self.read()
+            .filter((F.col("status") == STATUS_DONE) & F.col("committed"))
+            .select("spec_hash")
         )
-
-    def completed(self, items: DataFrame) -> DataFrame:
-        """Items whose results are ready to merge."""
-        return items.join(F.broadcast(self.cached_hashes()), "spec_hash", "inner")
+        return items.join(F.broadcast(cached), "spec_hash", "left_anti")
 
     def result_path(self, spec_hash: str) -> str:
         return os.path.join(self.root, "results", spec_hash)
 
-    def put(self, spec_hash: str, kind: str, df: DataFrame) -> str:
-        """Write one result + commit its manifest row. See put_many."""
-        return self.put_many([(spec_hash, kind, df)])[0]
-
     def put_many(
         self, entries: list[tuple[str, str, DataFrame]]
     ) -> list[str]:
-        """Write results, then commit ALL manifest rows in one upsert
-        (the reference's idempotent enqueue, extract_check.py:165-183,
-        batched). Results are written before the manifest commit, so a
-        crash mid-batch leaves at worst uncommitted artifacts — never
-        a phantom cache hit. One log commit per batch instead of per
-        item; on a cluster store the same operation is a Delta MERGE."""
+        """Write results, then commit ALL manifest rows in one log
+        commit (the reference's idempotent enqueue,
+        extract_check.py:165-183, batched). Results are written before
+        the manifest commit, so a crash mid-batch leaves at worst
+        uncommitted artifacts — never a phantom cache hit."""
         if not entries:
             return []
         from concurrent.futures import ThreadPoolExecutor
@@ -493,60 +200,20 @@ class CacheManifest:
         # (Spark's scheduler interleaves the jobs across the executor)
         with ThreadPoolExecutor(max_workers=min(8, len(entries))) as ex:
             list(ex.map(write, [(p, e[2]) for p, e in zip(paths, entries)]))
-        rows = [
-            (h, kind, STATUS_DONE, True, p, 0)
-            for (h, kind, _), p in zip(entries, paths)
-        ]
-        # one atomic upsert for the whole batch: concurrent writers'
+        # one atomic commit for the whole batch: concurrent writers'
         # commits interleave as distinct versions, never overwriting
         # each other (the rewrite-in-place this replaces could drop a
         # concurrent batch's rows)
-        self._upsert(rows)
+        self._commit(
+            [
+                (h, kind, STATUS_DONE, True, p, 0)
+                for (h, kind, _), p in zip(entries, paths)
+            ]
+        )
         return paths
-
-    def _upsert(self, rows: list[tuple]) -> None:
-        """Backend hook for put_many's manifest update: one atomic
-        batch upsert keyed by spec_hash."""
-        self._commit(rows)
 
     def get(self, spec_hash: str) -> DataFrame:
         return self.spark.read.parquet(self.result_path(spec_hash))
-
-    def diff(
-        self, v_from: int, v_to: int | None = None
-    ) -> DataFrame:
-        """Audit two points of manifest history: what changed between
-        ``read(as_of_version=v_from)`` and ``v_to`` (None = current).
-        Returns one row per differing spec_hash with ``change`` in
-        (added, changed, removed) plus the before/after paths — the
-        time-travel DESCRIBE-HISTORY companion: checkpoint() keeps the
-        versions readable, diff() explains them. Removed never occurs
-        under pure upserts but is classified for completeness."""
-        a = self.read(as_of_version=v_from).select(
-            F.col("spec_hash"),
-            F.struct("kind", "status", "committed", "path").alias("__a"),
-        )
-        b = self.read(as_of_version=v_to).select(
-            F.col("spec_hash"),
-            F.struct("kind", "status", "committed", "path").alias("__b"),
-        )
-        j = a.join(b, "spec_hash", "full_outer")
-        return (
-            j.withColumn(
-                "change",
-                F.when(F.col("__a").isNull(), F.lit("added"))
-                .when(F.col("__b").isNull(), F.lit("removed"))
-                .when(F.col("__a") != F.col("__b"), F.lit("changed"))
-                .otherwise(F.lit(None)),
-            )
-            .filter(F.col("change").isNotNull())
-            .select(
-                "spec_hash",
-                "change",
-                F.col("__a.path").alias("path_from"),
-                F.col("__b.path").alias("path_to"),
-            )
-        )
 
     def vacuum(
         self, retention_s: float = 86_400.0, dry_run: bool = False
@@ -555,15 +222,14 @@ class CacheManifest:
         row references. ``put_many`` writes artifacts BEFORE the
         manifest commit (crash-safe ordering: at worst uncommitted
         artifacts, never a phantom cache hit), so crashes accumulate
-        orphans this reclaims — the Delta VACUUM mirror for the
-        tx-log backend.
+        orphans this reclaims.
 
         ``retention_s`` is the safety window against exactly that
         write-then-commit ordering racing a live ``put_many``: only
         directories whose mtime is older than the retention are
         candidates, so an artifact written but not yet committed is
-        never swept (Delta's retention guard, same reasoning). Returns
-        the removed (or, with ``dry_run``, would-be-removed) paths."""
+        never swept. Returns the removed (or, with ``dry_run``,
+        would-be-removed) paths."""
         import time
 
         results_dir = os.path.join(self.root, "results")
@@ -595,114 +261,3 @@ class CacheManifest:
             if not dry_run:
                 shutil.rmtree(full, ignore_errors=True)
         return removed
-
-
-def delta_available() -> bool:
-    """True when delta-spark is importable (absent from this container;
-    the gate mirrors the rasterio/shapely pattern in sources/)."""
-    try:
-        import delta.tables  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class DeltaCacheManifest(CacheManifest):
-    """Delta-Lake-backed manifest: identical interface, with the batch
-    upsert expressed as a real ACID ``MERGE INTO`` so a cluster object
-    store gets snapshot isolation + conflict detection from the Delta
-    protocol instead of this module's link(2) transaction log
-    (VERDICT r02 #7).
-
-    Requires delta-spark (``pip install delta-spark``) AND a session
-    built with the Delta SQL extension + catalog configs; neither is in
-    this container, so the class is construction-gated — tests cover
-    the gate, and the tx-log backend passes the same idempotency /
-    concurrency suite. Migration: point ``open_manifest(backend="delta")``
-    at the same root; the first ``put_many`` creates the Delta table.
-    """
-
-    def __init__(self, spark: SparkSession, root: str):
-        if not delta_available():
-            raise ImportError(
-                "delta-spark is not installed; use CacheManifest (the "
-                "transaction-log backend) or install delta-spark"
-            )
-        super().__init__(spark, root)
-        self.table_path = os.path.join(root, "_manifest_delta")
-
-    def _table_exists(self) -> bool:
-        from delta.tables import DeltaTable
-
-        return DeltaTable.isDeltaTable(self.spark, self.table_path)
-
-    def read(self, as_of_version: int | None = None) -> DataFrame:
-        if not self._table_exists():
-            return self.spark.createDataFrame([], schema=MANIFEST_SCHEMA)
-        reader = self.spark.read.format("delta")
-        if as_of_version is not None:
-            # Delta-native time travel — same contract as the tx-log
-            # backend's as_of_version replay
-            reader = reader.option("versionAsOf", str(as_of_version))
-        return reader.load(self.table_path)
-
-    def _upsert(self, rows: list[tuple]) -> None:
-        """MERGE the batch by spec_hash. Delta's optimistic commit
-        protocol retries on conflict, so concurrent put_many batches
-        serialize without this module's version-claim loop."""
-        from delta.tables import DeltaTable
-
-        # deduplicate within the batch DETERMINISTICALLY (last wins,
-        # matching the tx-log backend's highest-version-wins replay) —
-        # driver-side, since ``rows`` is a Python list. This also
-        # keeps the MERGE legal: Delta throws "multiple source rows
-        # matched" on intra-batch duplicate keys. (A row_number over
-        # orderBy(lit(1)) here would pick an ARBITRARY survivor.)
-        last: dict = {}
-        for r in rows:
-            last[r[0]] = r
-        updates = self.spark.createDataFrame(
-            list(last.values()), schema=MANIFEST_SCHEMA
-        )
-        if not self._table_exists():
-            updates.write.format("delta").mode("overwrite").save(
-                self.table_path
-            )
-            return
-        (
-            DeltaTable.forPath(self.spark, self.table_path)
-            .alias("m")
-            .merge(updates.alias("u"), "m.spec_hash = u.spec_hash")
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def compact(self) -> None:
-        """Delta keeps per-key current state natively; log management
-        is OPTIMIZE/VACUUM, run out-of-band. No-op here."""
-
-    def checkpoint(self) -> int | None:
-        """Delta writes its own _last_checkpoint every N commits —
-        nothing to do here."""
-        return None
-
-    def _versions(self) -> list[int]:
-        raise NotImplementedError("Delta backend has no local version log")
-
-    def _commit(self, rows, require_version=None):
-        raise NotImplementedError("Delta backend commits via MERGE")
-
-
-def open_manifest(
-    spark: SparkSession, root: str, backend: str = "auto"
-) -> CacheManifest:
-    """Pick the manifest backend: ``"txlog"`` (always available),
-    ``"delta"`` (requires delta-spark), or ``"auto"`` = delta when
-    importable, else the transaction log."""
-    if backend == "delta" or (backend == "auto" and delta_available()):
-        return DeltaCacheManifest(spark, root)
-    if backend in ("auto", "txlog"):
-        return CacheManifest(spark, root)
-    raise ValueError(f"unknown manifest backend: {backend!r}")

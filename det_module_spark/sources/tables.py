@@ -85,7 +85,7 @@ def _ts_unit(path: str) -> str | None:
 TEXT_TABLES = {"documents", "customer"}
 
 
-def _scan_floor_partitions(spark: SparkSession, path: str, name: str) -> int:
+def _scan_floor_partitions(path: str, name: str) -> int:
     """Parallelism floor for unsplittable inputs (optimization guide
     §2.5 "one huge unsplittable file ... repartition immediately after
     the read"): the driver testdata ships each table as ONE parquet
@@ -96,7 +96,8 @@ def _scan_floor_partitions(spark: SparkSession, path: str, name: str) -> int:
     per-byte CPU is far higher), capped at the core count — derived
     from INPUT SIZE, not a constant: dims (region, supplier) stay at
     1 partition, and at production scale the scan already yields
-    ≥ cores partitions so the floor never fires."""
+    ≥ cores partitions so the floor never fires. A non-positive byte
+    target is a misconfiguration and raises ``ValueError``."""
     import glob
 
     default = 64 * 1024 if name in TEXT_TABLES else 1024 * 1024
@@ -106,6 +107,8 @@ def _scan_floor_partitions(spark: SparkSession, path: str, name: str) -> int:
         else "SPARK_GRAFT_SCAN_PART_BYTES"
     )
     target = int(os.environ.get(env, str(default)))
+    if target <= 0:
+        raise ValueError(f"{env} must be a positive byte count, got {target}")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     files = (
         [path]
@@ -121,7 +124,7 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     root = os.path.join(sf_dir, name)
     path = single if os.path.exists(single) else root
     df = _read_table(spark, path, name)
-    floor = _scan_floor_partitions(spark, path, name)
+    floor = _scan_floor_partitions(path, name)
     if floor > 1 and df.rdd.getNumPartitions() < floor:
         # round-robin repartition right after the read; filters and
         # column pruning still push through to the parquet scan
@@ -319,9 +322,3 @@ def write_bucketed_spill_aware(
         "skew_ratio": round(skew_ratio, 2),
     }
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so ``spark.sql`` sees the
-    same names the DuckDB oracle does."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

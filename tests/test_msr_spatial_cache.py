@@ -98,15 +98,15 @@ def test_cache_round_trip_and_idempotency(spark, tmp_path):
     # empty manifest: everything is missing
     assert cache.missing(items).count() == 2
     result = spark.createDataFrame([Row(asdf_id=1, exfield_0=4.2)])
-    cache.put("h1", "extract", result)
+    cache.put_many([("h1", "extract", result)])
     # second pass: only h2 missing; h1 readable and complete
-    missing = cache.missing(items).collect()
-    assert [r["spec_hash"] for r in missing] == ["h2"]
-    assert cache.completed(items).count() == 1
+    missing = cache.missing(items)
+    assert [r["spec_hash"] for r in missing.collect()] == ["h2"]
+    assert items.join(missing, "spec_hash", "left_anti").count() == 1
     assert cache.get("h1").collect()[0]["exfield_0"] == 4.2
     # re-put is idempotent (reference: find-then-update-else-insert,
     # extract_check.py:165-183)
-    cache.put("h1", "extract", result)
+    cache.put_many([("h1", "extract", result)])
     assert cache.missing(items).count() == 1
     assert cache.read().filter(F.col("spec_hash") == "h1").count() == 1
 
@@ -114,12 +114,18 @@ def test_cache_round_trip_and_idempotency(spark, tmp_path):
 def test_cache_concurrent_put_many_no_lost_rows(spark, tmp_path):
     """VERDICT r01 #5 'done' bar: two threads commit disjoint hash
     batches through the transaction log; every row survives (the old
-    rewrite-in-place manifest could drop a concurrent batch)."""
+    rewrite-in-place manifest could drop a concurrent batch). A reader
+    thread races the writers: every read succeeds and sees a subset of
+    the final state (commit files are immutable, so a lazily replayed
+    listing can never break or go partial)."""
     import threading
 
     cache = CacheManifest(spark, str(tmp_path / "cache"))
     result = spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)])
+    want = {f"{p}{i}" for p in ("a", "b") for i in range(10)}
     errors = []
+    seen = []
+    done = threading.Event()
 
     def writer(prefix):
         try:
@@ -129,146 +135,35 @@ def test_cache_concurrent_put_many_no_lost_rows(spark, tmp_path):
         except Exception as e:  # pragma: no cover
             errors.append(e)
 
-    threads = [
-        threading.Thread(target=writer, args=(p,)) for p in ("a", "b")
-    ]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errors
-    got = {r["spec_hash"] for r in cache.cached_hashes().collect()}
-    want = {f"{p}{i}" for p in ("a", "b") for i in range(10)}
-    assert got == want
-    # every commit claimed a distinct version; log replay is stable
-    assert cache.read().count() == 20
-
-
-def test_cache_log_compaction(spark, tmp_path):
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    result = spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)])
-    for i in range(5):
-        cache.put(f"h{i}", "extract", result)
-    # re-put h0 so the log has a superseded row
-    cache.put("h0", "extract", result)
-    before = {r["spec_hash"] for r in cache.cached_hashes().collect()}
-    assert len(cache._versions()) == 6
-    cache.compact()
-    assert len(cache._versions()) == 1
-    after = {r["spec_hash"] for r in cache.cached_hashes().collect()}
-    assert after == before == {f"h{i}" for i in range(5)}
-    # writes keep working after compaction
-    cache.put("h9", "extract", result)
-    assert cache.read().count() == 6
-
-
-def test_compact_cas_rejects_stale_snapshot(spark, tmp_path):
-    """The compact CAS primitive: a snapshot may only land as
-    snapshot_max+1; if a concurrent commit took that version the
-    claim returns None instead of silently reverting it (ADVICE r02:
-    the old read-then-append assigned the stale snapshot an ever-
-    higher version, erasing any commit that landed in between)."""
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    row = lambda h, p: (h, "extract", 1, True, p, 0)  # noqa: E731
-    cache._commit([row("h0", "p0")])  # version 0
-    snap_max = cache._versions()[-1]
-    stale = [row("h0", "p0")]
-    # concurrent writer lands AFTER the snapshot: updates h0
-    cache._commit([row("h0", "p0-new")])  # version 1
-    assert cache._commit(stale, require_version=snap_max + 1) is None
-    got = {r["spec_hash"]: r["path"] for r in cache.read().collect()}
-    assert got == {"h0": "p0-new"}
-
-
-def test_compact_retries_over_concurrent_commit(spark, tmp_path):
-    """End-to-end: a commit that lands between compact's snapshot and
-    its claim survives — compact retries with a fresh snapshot that
-    includes it."""
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    row = lambda h, p: (h, "extract", 1, True, p, 0)  # noqa: E731
-    cache._commit([row("h0", "p0")])
-    cache._commit([row("h1", "p1")])
-
-    real_commit = CacheManifest._commit
-    fired = {"done": False}
-
-    def racing_commit(self, rows, require_version=None):
-        # first CAS attempt: inject a concurrent writer after the
-        # snapshot was taken, so the pinned version is already claimed
-        if require_version is not None and not fired["done"]:
-            fired["done"] = True
-            racer = CacheManifest(spark, self.root)
-            real_commit(racer, [row("h0", "p0-racer")])
-        return real_commit(self, rows, require_version)
-
-    cache._commit = racing_commit.__get__(cache)
-    cache.compact()
-    got = {r["spec_hash"]: r["path"] for r in cache.read().collect()}
-    # the racer's update is in the final state, not reverted
-    assert got == {"h0": "p0-racer", "h1": "p1"}
-    assert len(cache._versions()) == 1
-
-
-def test_concurrent_compact_vs_put_no_lost_update(spark, tmp_path):
-    """Stress the full concurrency story (VERDICT r03 #7): writer
-    threads committing upserts WHILE another thread compacts in a
-    loop. Every committed row must survive into the final state (no
-    lost update), and concurrent reads racing the compaction must
-    never throw on a vanished log file or observe a partial state."""
-    import threading
-
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    row = lambda h: (h, "extract", 1, True, f"p-{h}", 0)  # noqa: E731
-    cache._commit([row("seed")])
-    errors = []
-    n_writers, n_each = 4, 8
-
-    def writer(w):
-        try:
-            for i in range(n_each):
-                cache._upsert([row(f"w{w}-{i}")])
-        except Exception as e:  # noqa: BLE001 — collected for assert
-            errors.append(("writer", e))
-
-    def compactor():
-        try:
-            for i in range(6):
-                # alternate checkpoint (non-destructive fold) with
-                # compact (destructive) so reads race BOTH paths
-                if i % 2 == 0:
-                    cache.checkpoint()
-                cache.compact()
-        except Exception as e:  # noqa: BLE001 — collected for assert
-            errors.append(("compact", e))
-
     def reader():
         try:
-            for _ in range(10):
-                got = {
-                    r["spec_hash"] for r in cache.cached_hashes().collect()
-                }
-                assert "seed" in got  # never a partial/empty state
-        except Exception as e:  # noqa: BLE001 — collected for assert
-            errors.append(("reader", e))
+            while True:
+                seen.append({r["spec_hash"] for r in cache.read().collect()})
+                if done.is_set():
+                    break
+        except Exception as e:  # pragma: no cover
+            errors.append(e)
 
-    threads = (
-        [threading.Thread(target=writer, args=(w,)) for w in range(n_writers)]
-        + [threading.Thread(target=compactor), threading.Thread(target=reader)]
-    )
-    for t in threads:
+    writers = [
+        threading.Thread(target=writer, args=(p,)) for p in ("a", "b")
+    ]
+    reading = threading.Thread(target=reader)
+    reading.start()
+    for t in writers:
         t.start()
-    for t in threads:
+    for t in writers:
         t.join()
+    done.set()
+    reading.join()
     assert not errors, errors
+    assert seen and all(s <= want for s in seen)
     got = {r["spec_hash"] for r in cache.read().collect()}
-    want = {"seed"} | {
-        f"w{w}-{i}" for w in range(n_writers) for i in range(n_each)
-    }
-    assert got == want  # nothing lost to a compaction race
-    # a final compact folds everything into one commit
-    cache.compact()
-    assert len(cache._versions()) == 1
-    assert {r["spec_hash"] for r in cache.read().collect()} == want
+    assert got == want
+    items = spark.createDataFrame([Row(spec_hash=h) for h in sorted(want)])
+    assert cache.missing(items).count() == 0
+    # every commit claimed a distinct version; log replay is stable
+    assert len(cache.versions()) == 20
+    assert cache.read().count() == 20
 
 
 def test_vacuum_reclaims_orphans_with_retention(spark, tmp_path):
@@ -281,7 +176,7 @@ def test_vacuum_reclaims_orphans_with_retention(spark, tmp_path):
 
     cache = CacheManifest(spark, str(tmp_path / "cache"))
     result = spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)])
-    cache.put("live", "extract", result)
+    cache.put_many([("live", "extract", result)])
     # simulate a crashed batch: artifact on disk, no manifest row
     orphan = cache.result_path("crashed")
     result.write.mode("overwrite").parquet(orphan)
@@ -301,135 +196,3 @@ def test_vacuum_reclaims_orphans_with_retention(spark, tmp_path):
     os.utime(live, (old, old))
     assert cache.vacuum(retention_s=10) == []
     assert cache.get("live").count() == 1
-
-
-def test_checkpoint_preserves_time_travel(spark, tmp_path):
-    """checkpoint() folds state through version V into _ckpt/V WITHOUT
-    deleting commits: reads replay checkpoint + tail, and time travel
-    to ANY version still works (the property compact() gives up)."""
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    row = lambda h, p: (h, "extract", 1, True, p, 0)  # noqa: E731
-    cache._commit([row("h0", "p0")])  # v0
-    cache._commit([row("h1", "p1")])  # v1
-    cache._commit([row("h0", "p0b")])  # v2 supersedes h0
-    v = cache.checkpoint()
-    assert v == 2 and cache._ckpt_versions() == [2]
-    # commits all still present — history intact
-    assert cache._versions() == [0, 1, 2]
-    cache._commit([row("h2", "p2")])  # v3, tail above the checkpoint
-    got = {r["spec_hash"]: r["path"] for r in cache.read().collect()}
-    assert got == {"h0": "p0b", "h1": "p1", "h2": "p2"}
-    # time travel BELOW the checkpoint replays raw commits
-    past = {
-        r["spec_hash"]: r["path"]
-        for r in cache.read(as_of_version=1).collect()
-    }
-    assert past == {"h0": "p0", "h1": "p1"}
-    # time travel AT the checkpoint uses it
-    at = {
-        r["spec_hash"]: r["path"]
-        for r in cache.read(as_of_version=2).collect()
-    }
-    assert at == {"h0": "p0b", "h1": "p1"}
-    # checkpointing the same max version again is a no-op dedupe
-    assert cache.checkpoint() == 3
-    assert cache._ckpt_versions() == [2, 3]
-
-
-def test_manifest_diff_between_versions(spark, tmp_path):
-    """diff(v_from, v_to): added vs changed rows between two
-    time-travel points, stable even when a checkpoint accelerates the
-    newer read."""
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    row = lambda h, p: (h, "extract", 1, True, p, 0)  # noqa: E731
-    cache._commit([row("h0", "p0")])  # v0
-    cache._commit([row("h1", "p1")])  # v1
-    cache._commit([row("h0", "p0b")])  # v2: h0 changed
-    cache._commit([row("h2", "p2")])  # v3: h2 added
-    cache.checkpoint()
-    got = {
-        r["spec_hash"]: (r["change"], r["path_from"], r["path_to"])
-        for r in cache.diff(1).collect()
-    }
-    assert got == {
-        "h0": ("changed", "p0", "p0b"),
-        "h2": ("added", None, "p2"),
-    }
-    # an interval with no changes diffs empty
-    assert cache.diff(3).count() == 0
-    # and a bounded interval
-    mid = {
-        r["spec_hash"]: r["change"] for r in cache.diff(0, 2).collect()
-    }
-    assert mid == {"h0": "changed", "h1": "added"}
-
-
-def test_checkpoint_composes_with_compact(spark, tmp_path):
-    """After compact() deletes commits below the fold, reads from an
-    older checkpoint still converge: the fold commit in the tail
-    carries the full state."""
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    row = lambda h, p: (h, "extract", 1, True, p, 0)  # noqa: E731
-    for i in range(4):
-        cache._commit([row(f"h{i}", f"p{i}")])
-    assert cache.checkpoint() == 3
-    cache._commit([row("h4", "p4")])
-    cache.compact()  # folds 0..4 into 5, deletes 0..4
-    assert cache._versions() == [5]
-    got = {r["spec_hash"] for r in cache.read().collect()}
-    assert got == {f"h{i}" for i in range(5)}
-    # and a fresh checkpoint at the fold version works
-    assert cache.checkpoint() == 5
-
-
-def test_manifest_backend_selection(spark, tmp_path):
-    """open_manifest mirrors the rasterio/shapely gating: delta-spark
-    is absent from this container, so "auto" falls back to the tx-log
-    backend, "delta" raises the gate ImportError, and put_many routes
-    through the backend-neutral _upsert hook (VERDICT r02 #7)."""
-    from det_module_spark.plans.cache import (
-        DeltaCacheManifest,
-        delta_available,
-        open_manifest,
-    )
-
-    assert not delta_available()  # container fact; Delta path is gated
-    m = open_manifest(spark, str(tmp_path / "cache"))
-    assert type(m) is CacheManifest
-    with pytest.raises(ImportError):
-        DeltaCacheManifest(spark, str(tmp_path / "cache"))
-    with pytest.raises(ImportError):
-        open_manifest(spark, str(tmp_path / "cache"), backend="delta")
-    with pytest.raises(ValueError):
-        open_manifest(spark, str(tmp_path / "cache"), backend="bogus")
-    # the tx-log backend still satisfies the shared contract through
-    # the factory (same suite the Delta backend would run under)
-    result = spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)])
-    m.put_many([("hx", "extract", result)])
-    assert {r["spec_hash"] for r in m.cached_hashes().collect()} == {"hx"}
-
-
-def test_manifest_time_travel(spark, tmp_path):
-    """read(as_of_version=v) reproduces each historical state exactly:
-    commits are immutable once claimed."""
-    cache = CacheManifest(spark, str(tmp_path / "cache"))
-    r1 = spark.createDataFrame([Row(asdf_id=1, exfield_0=1.0)])
-    cache.put("h1", "extract", r1)
-    v0 = cache.versions()[-1]
-    cache.put("h2", "extract", r1)
-    v1 = cache.versions()[-1]
-    cache.put("h1", "extract", r1)  # h1 re-put: newer row wins later
-    v2 = cache.versions()[-1]
-    assert v0 < v1 < v2
-
-    def state(v=None):
-        return sorted(
-            r["spec_hash"] for r in cache.read(as_of_version=v).collect()
-        )
-
-    assert state(v0) == ["h1"]
-    assert state(v1) == ["h1", "h2"]
-    assert state(v2) == ["h1", "h2"]
-    assert state() == state(v2)
-    # as-of before any commit: empty
-    assert state(v0 - 1) == []

@@ -72,22 +72,6 @@ def test_validate_request_malformed_boundary_is_invalid(spark):
     assert not validate_request({"raster_data": ["r"]})
 
 
-def test_engine_accepts_injected_manifest(spark, tmp_path):
-    from det_module_spark.plans.runner import Engine
-
-    own = CacheManifest(spark, str(tmp_path / "m"))
-    eng = Engine(
-        spark,
-        str(tmp_path / "ignored"),
-        cell_source=lambda item: None,
-        manifest=own,
-    )
-    assert eng.cache is own
-    # default path goes through open_manifest (txlog in this env)
-    eng2 = Engine(spark, str(tmp_path / "d"), cell_source=lambda i: None)
-    assert isinstance(eng2.cache, CacheManifest)
-
-
 def test_stream_to_cache_null_hash_rows_dropped_not_fatal(spark, tmp_path):
     from det_module_spark.streaming.cache_sink import stream_to_cache
 

@@ -44,10 +44,19 @@ CHANGED_PATH_R11 = [
 ]
 
 
+ROUND = 11
+
+
 def _latest_driver_round() -> dict[str, int]:
+    """Latest CORRECTNESS-record round per query, from the records that
+    PRECEDE this round — the history the window was composed from. The
+    round's own CORRECTNESS_r11.json records the window itself, so it
+    is not an input."""
     latest: dict[str, int] = {}
     for f in sorted(glob.glob(str(REPO / "CORRECTNESS_r*.json"))):
         rnd = int(Path(f).name.split("_r")[1].split(".")[0])
+        if rnd >= ROUND:
+            continue
         for q in json.load(open(f)):
             latest[q] = max(latest.get(q, 0), rnd)
     return latest

@@ -165,8 +165,9 @@ def test_plan_opaque_list_matches_registry(spark):
 # pin the cleaned state).
 BROADCAST_WHITELIST = {
     "det_module_spark/plans/cache.py": (
-        2,
-        "cached_hashes(): manifest-sized (one row per completed spec)",
+        1,
+        "missing(): cached-hash side is manifest-sized (one row per "
+        "completed spec)",
     ),
     "det_module_spark/operators/decontaminate.py": (
         1,
@@ -378,8 +379,8 @@ COLLECT_WHITELIST = {
         "estimate; per-bucket max/mean) — control plane, never data",
     ),
     "det_module_spark/plans/cache.py": (
-        4,
-        "manifest log reads: one row per commit, compaction-bounded",
+        1,
+        "vacuum(): referenced artifact paths, one row per cached spec",
     ),
     "det_module_spark/plans/runner.py": (
         1,
@@ -484,7 +485,7 @@ def test_unpartitioned_windows_are_whitelisted_bounded_frames(spark, sf_dir):
 @pytest.mark.parametrize("pattern", [r"\.rdd\b", r"mapPartitions\("])
 def test_no_rdd_fallbacks_outside_known_sites(pattern):
     """The engine is DataFrame-first: raw RDD access in an operator is
-    either a plan-pinning localCheckpoint (cache.py) or a mistake."""
+    a mistake."""
     rx = re.compile(pattern)
     offenders = []
     for path in sorted((REPO / "det_module_spark" / "operators").rglob("*.py")):

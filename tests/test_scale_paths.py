@@ -11,6 +11,7 @@ from pyspark.sql import types as T
 
 from det_module_spark.operators.similarity import cosine_topk, ivf_topk
 from det_module_spark.sources.tables import (
+    _scan_floor_partitions,
     load_table,
     write_bucketed,
     write_partitioned,
@@ -37,6 +38,28 @@ def test_ivf_deterministic(spark, sf_dir):
         "query_id", "rank"
     ).collect()
     assert a == b
+
+
+@pytest.mark.parametrize(
+    "env, name",
+    [
+        ("SPARK_GRAFT_SCAN_PART_BYTES", "orders"),
+        ("SPARK_GRAFT_SCAN_PART_BYTES_TEXT", "documents"),
+    ],
+)
+def test_scan_floor_rejects_non_positive_target(monkeypatch, tmp_path, env, name):
+    """A zero or negative per-partition byte target is a configuration
+    error named by its variable, not a ZeroDivisionError; a positive
+    one still sizes the floor from the input bytes."""
+    f = tmp_path / f"{name}.parquet"
+    f.write_bytes(b"x" * 4096)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "4")
+    for bad in ("0", "-1"):
+        monkeypatch.setenv(env, bad)
+        with pytest.raises(ValueError, match=env):
+            _scan_floor_partitions(str(f), name)
+    monkeypatch.setenv(env, "1024")
+    assert _scan_floor_partitions(str(f), name) == 4
 
 
 def test_partition_pruning(spark, tmp_path):
