@@ -1,7 +1,7 @@
 """det_module_spark — a PySpark-native analytics engine.
 
 A from-scratch re-founding of the query surface of ``aiddata/det-module``
-(reference surveyed in /root/repo/SURVEY.md) on Apache Spark:
+(reference surveyed in SURVEY.md) on Apache Spark:
 
 - declarative request specs -> logical item plans (plans/)
 - the zonal-statistics aggregate vocabulary (operators/extract_types.py)

@@ -30,10 +30,19 @@ spec_hash", so concurrent writers can interleave but can never lose
 each other's rows — rewrite-in-place could. Nothing ever deletes a
 commit file, so a listed log file stays readable for the lifetime of
 any lazily evaluated read.
+
+Reads: every artifact is written by Spark, which records the frame's
+schema in each parquet footer under the key-value entry
+``org.apache.spark.sql.parquet.row.metadata``. ``get`` reads that entry
+from the first data file's footer on the driver (pyarrow) and hands it
+to ``spark.read.schema(...)``. Spark's own inference prefers the same
+entry, so the frame is identical to ``spark.read.parquet(path)``, but
+the read starts no Spark job (inference would start one per read).
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import tempfile
@@ -58,6 +67,10 @@ MANIFEST_SCHEMA = T.StructType(
     ]
 )
 
+
+# the key-value footer entry in which Spark records the schema of every
+# parquet file it writes (ParquetReadSupport.SPARK_METADATA_KEY)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 _LOG_SCHEMA = T.StructType(
     list(MANIFEST_SCHEMA.fields)
@@ -213,7 +226,31 @@ class CacheManifest:
         return paths
 
     def get(self, spec_hash: str) -> DataFrame:
-        return self.spark.read.parquet(self.result_path(spec_hash))
+        """The artifact of ``spec_hash`` as a lazy frame, read with the
+        schema Spark stored in its first data file's footer (see the
+        module docstring): the same frame as ``spark.read.parquet``,
+        without its schema-inference job. Raises ``KeyError`` when the
+        artifact has no data file and ``ValueError`` when the footer
+        lacks Spark's schema."""
+        import pyarrow.parquet as pq
+
+        path = self.result_path(spec_hash)
+        try:
+            names = sorted(
+                n for n in os.listdir(path) if not n.startswith(("_", "."))
+            )
+        except FileNotFoundError:
+            names = []
+        if not names:
+            raise KeyError(f"no cached artifact for spec hash {spec_hash!r}")
+        first = os.path.join(path, names[0])
+        meta = pq.read_schema(first).metadata or {}
+        if _SPARK_SCHEMA_KEY not in meta:
+            raise ValueError(
+                f"{first} has no Spark schema ({_SPARK_SCHEMA_KEY.decode()})"
+            )
+        schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+        return self.spark.read.schema(schema).parquet(path)
 
     def vacuum(
         self, retention_s: float = 86_400.0, dry_run: bool = False

@@ -1,11 +1,14 @@
-"""MSR allocation, grid-bucketed spatial join, and cache idempotency."""
+"""MSR allocation, grid-bucketed spatial join, cache idempotency, and
+schema-carrying cache reads."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from det_module_spark.operators.extract_types import zonal_extract
 from det_module_spark.operators.msr import (
     apply_release_filters,
     even_split_allocation,
@@ -171,7 +174,6 @@ def test_vacuum_reclaims_orphans_with_retention(spark, tmp_path):
     put_many's crash-safe write-then-commit ordering can leave them —
     but NEVER inside the retention window (a live put_many may have
     written-but-not-yet-committed them)."""
-    import os
     import time
 
     cache = CacheManifest(spark, str(tmp_path / "cache"))
@@ -196,3 +198,106 @@ def test_vacuum_reclaims_orphans_with_retention(spark, tmp_path):
     os.utime(live, (old, old))
     assert cache.vacuum(retention_s=10) == []
     assert cache.get("live").count() == 1
+
+
+# -- get(): the reader is built from the schema in the artifact's footer --
+
+CELLS = [
+    # (asdf_id, value, coverage, potential, category)
+    (1, 10.0, 0.5, 20.0, "water"),
+    (1, 20.0, 1.0, 20.0, "water"),
+    (1, 30.0, 0.25, 40.0, "forest"),
+    (2, 5.0, 1.0, 10.0, "desert"),
+    (2, None, 0.5, 10.0, "water"),
+]
+
+
+@pytest.fixture(scope="module")
+def cells(spark):
+    return spark.createDataFrame(
+        CELLS, "asdf_id long, value double, coverage double, "
+        "potential double, category string",
+    )
+
+
+ARTIFACTS = {
+    # the engine coalesces extracts and MSR surfaces to one file
+    "scalar": lambda spark, cells, locs: zonal_extract(cells, "mean")
+    .coalesce(1),
+    "categorical": lambda spark, cells, locs: zonal_extract(
+        cells, "categorical", categories=["desert", "forest", "water"]
+    ).coalesce(1),
+    "reliability": lambda spark, cells, locs: zonal_extract(
+        cells, "reliability"
+    ).coalesce(1),
+    "msr": lambda spark, cells, locs: msr_surface(
+        even_split_allocation(locs)
+    ).coalesce(1),
+    # streaming cache-sink artifacts are not coalesced
+    "multi_file": lambda spark, cells, locs: spark.range(0, 4, 1, 2)
+    .withColumn("v", F.col("id") * 0.5),
+    "empty": lambda spark, cells, locs: zonal_extract(cells, "sum")
+    .filter(F.lit(False))
+    .coalesce(1),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(ARTIFACTS))
+def test_cache_get_matches_inferred_read(spark, tmp_path, cells, locations, kind):
+    """get(h) is the frame spark.read.parquet would infer: same schema,
+    same rows, for every kind of artifact the cache holds."""
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    cache.put_many([("h", kind, ARTIFACTS[kind](spark, cells, locations))])
+    path = cache.result_path("h")
+    if kind == "multi_file":
+        assert len([n for n in os.listdir(path) if n.startswith("part-")]) == 2
+    got, want = cache.get("h"), spark.read.parquet(path)
+    assert got.schema == want.schema
+    rows = sorted(got.collect())
+    assert rows == sorted(want.collect())
+    assert bool(rows) == (kind != "empty")
+
+
+def _jobs_run_by(spark, group, fn):
+    """Spark jobs ``fn`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job events reach the status store asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_get_starts_no_spark_job(spark, tmp_path):
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    cache.put_many([("h", "extract", spark.range(3).coalesce(1))])
+    path = cache.result_path("h")
+    # control: schema inference is a job, so the count can see one
+    assert _jobs_run_by(spark, "infer-read", lambda: spark.read.parquet(path)) >= 1
+    assert _jobs_run_by(spark, "cache-get", lambda: cache.get("h")) == 0
+
+
+def test_cache_get_missing_artifact_is_key_error(spark, tmp_path):
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    with pytest.raises(KeyError, match="absent"):
+        cache.get("absent")
+    # a directory holding only bookkeeping files has no data file either
+    os.makedirs(cache.result_path("husk"))
+    open(os.path.join(cache.result_path("husk"), "_SUCCESS"), "w").close()
+    with pytest.raises(KeyError, match="husk"):
+        cache.get("husk")
+
+
+def test_cache_get_footer_without_spark_schema_is_value_error(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cache = CacheManifest(spark, str(tmp_path / "cache"))
+    path = cache.result_path("foreign")
+    os.makedirs(path)
+    pq.write_table(pa.table({"x": [1, 2]}), os.path.join(path, "part-0.parquet"))
+    with pytest.raises(ValueError, match="part-0.parquet"):
+        cache.get("foreign")

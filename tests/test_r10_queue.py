@@ -20,8 +20,9 @@ pytestmark = pytest.mark.usefixtures("spark")
 
 def _compare(sdf, odf):
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     from check_parity import canon, dtype_kinds
 
     assert len(sdf) == len(odf)

@@ -12,8 +12,10 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -22,7 +24,7 @@ def main() -> None:
     ap.add_argument("--tag", required=True)
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--outdir", default="/root/repo/plans/r11")
+    ap.add_argument("--outdir", default=str(ROOT / "plans" / "r11"))
     args = ap.parse_args()
 
     os.environ["SPARK_GRAFT_SF_DIR"] = args.sf

@@ -24,11 +24,12 @@ replay queries that cannot be explained statically are tagged
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def _explain(df) -> str:
@@ -42,11 +43,7 @@ def main() -> None:
     from det_module_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "PLAN_REPORT.json",
-    )
-    sys.path.insert(0, "/root/repo")
+    out_path = sys.argv[2] if len(sys.argv) > 2 else str(ROOT / "PLAN_REPORT.json")
     from tests.test_scale_audit import PLAN_OPAQUE  # single source of truth
 
     spark = get_spark("plan-report")
